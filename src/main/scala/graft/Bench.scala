@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Benchmark main. Runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and emits one JSON metric line.
@@ -44,6 +45,17 @@ object Bench {
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 
+    // A failed query leaves its cause on stderr; fatal errors (OOM,
+    // interrupts) propagate and end the run.
+    def attempt(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean =
+      try { run(fn); true } catch {
+        case NonFatal(e) =>
+          System.err.println(
+            s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          false
+      }
+
     // Optional comma-separated query filter for focused re-measurement
     // (regression triage); absent = the full registered set, the
     // driver's standing protocol.
@@ -54,9 +66,7 @@ object Bench {
     }
 
     // Untimed warmup: JIT/codegen compile, parquet footer reads, JVM heap.
-    selected.foreach { case (_, fn) =>
-      try run(fn) catch { case _: Throwable => () }
-    }
+    selected.foreach { case (name, fn) => attempt(name, fn) }
     // Min over reps: local[32] timings jitter ~10% run-to-run (GC,
     // page cache); the minimum is the standard low-noise estimator of
     // a query's actual cost. A failing query must NOT masquerade as a
@@ -78,10 +88,10 @@ object Bench {
       .withDefaultValue(Nil)
     (0 until reps).foreach { r =>
       val order = if (r % 2 == 0) ordered else ordered.reverse
-      try run(order.head._2) catch { case _: Throwable => () } // throwaway
+      attempt(order.head._1, order.head._2) // throwaway
       order.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
-        val ok = try { run(fn); true } catch { case _: Throwable => false }
+        val ok = attempt(name, fn)
         timed(name) = ((System.nanoTime() - t0) / 1e9, ok) :: timed(name)
       }
     }
@@ -110,7 +120,7 @@ object Bench {
         val txt = Files.readString(Paths.get(pinsPath))
         "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty }
+      } catch { case NonFatal(_) => Map.empty }
     val focusedReps =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FOCUSED_REPS", "5").toInt
     // QUIET-SESSION GATE (VERDICT r14 item 5): the r14 close session
@@ -153,7 +163,7 @@ object Bench {
         val fn = SparkEntry.queries(k)
         val focused = (0 until focusedReps).map { _ =>
           val t0 = System.nanoTime()
-          try run(fn) catch { case _: Throwable => () }
+          attempt(k, fn)
           (System.nanoTime() - t0) / 1e9
         }.min
         (k, full, focused, pin)

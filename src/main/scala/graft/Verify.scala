@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * fails leaves its exception class and message in failures.json. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // ADVICE r16 #2: probe-only override must not leak into the
@@ -32,13 +34,17 @@ object Verify {
     // comma-separated queries
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
+    val failures = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case NonFatal(e) =>
+        System.err.println(
+          s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        Some(name -> e)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -56,6 +62,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failures
+      .map { case (k, e) =>
+        s"${q(k)}: {${q("class")}: ${q(e.getClass.getName)}, " +
+          s"${q("message")}: ${q(String.valueOf(e.getMessage))}}"
+      }.mkString("{", ",", "}"))
     // Bounded-error gates for the declared-approximate queries (r16
     // verdict #2): exact-recompute SQL + per-column tolerance checks.
     // The check fragments are authored as raw JSON in SparkEntry

@@ -133,6 +133,107 @@ class PlanAuditSpec extends AnyFunSuite {
       name -> SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
     }.toMap
 
+  /** Entries whose construction runs Spark jobs by design, each with
+    * what the jobs do — every other auditable query must build with
+    * zero jobs. The streams here are the finite arrival harness run to
+    * completion inside the builder; the lakehouse reads consult a
+    * staged manifest or index on the driver before they can say which
+    * files to scan.
+    */
+  private val eagerBuild: Map[String, String] = {
+    val stream = "runs its finite stream to completion"
+    val versions = "collects the version manifest (TimeTravel.readManifest)"
+    val zoneMap = "collects the zone-map files overlapping the rectangle"
+    val bloom = "collects the bloom manifest's candidate files"
+    val annIndex = "reads the landed ANN index manifest and artifacts"
+    Map(
+      "q40_interval_complement" -> "checkpoints the shared bin table",
+      "d07_dedup_groups" -> "checkpoints each label-propagation round",
+      "p03_dedup_corpus" -> "runs d07's checkpointed label propagation",
+      "p13_token_mixture" -> "localCheckpoints the one token-mass pass",
+      "p14_training_build" ->
+        "checkpoints the split table; composes p03 and p13",
+      "q22_incremental" -> "lands the resumed delta and its manifest",
+      "k10_schema_evolution" ->
+        "writes the two-schema tree, then merges its schemas",
+      "k15_coverage_track" -> "collects the track's min bin (window bound)",
+      "k17_bloom_point_lookup" -> bloom,
+      "k18_index_maintenance" -> bloom,
+      "k19_zonemap_skipping" -> zoneMap,
+      "k20_compact_reindex" -> zoneMap,
+      "k21_restore" -> versions,
+      "k22_shallow_clone" -> versions,
+      "k23_concurrent_commit" -> versions,
+      "k24_schema_evolution" -> versions,
+      "k26_partition_evolution" -> "collects the partition-spec log",
+      "k28_change_feed" -> versions,
+      "k29_column_stats" -> "infers the landed stats tree's schema",
+      "k30_retention" -> versions,
+      "k31_ann_index" -> annIndex,
+      "st09_stream_neardup" -> stream,
+      "st10_stream_sliding" -> stream,
+      "st17_stream_zonemap" -> s"$stream; then $zoneMap",
+      "st18_stream_join" -> stream,
+      "st19_stream_outer_join" -> stream,
+      "st20_stream_deletes" -> stream,
+      "st21_stream_constraints" -> stream,
+      "st22_stream_blob_ingest" -> stream,
+      "st23_stream_session_timers" -> stream,
+      "st25_stream_change_feed" -> stream,
+      "st27_stream_ann_ingest" -> annIndex)
+  }
+
+  /** Building a query is lazy: with input schemas resolved once
+    * (`Tables.load`) and staging memos landed by the planning pass
+    * above, constructing a DataFrame not in `eagerBuild` must start no
+    * Spark job. Jobs are attributed by a local property set on this
+    * thread (inherited by any thread a builder spawns), and a marker
+    * job drains the listener bus: its start arrives after every
+    * earlier job's.
+    */
+  test("building a query not marked eager runs no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.audit.build"
+    val drain = "__drain__"
+    // written only on the listener thread, read after the latch
+    val jobs = collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach { q =>
+            if (q == drain) drained.countDown()
+            else jobs(q) += 1
+          }
+    }
+    val names = plansByName.keys.toSeq.sorted // the warm-up build
+    sc.addSparkListener(listener)
+    try {
+      names.foreach { name =>
+        sc.setLocalProperty(key, name)
+        SparkEntry.queries(name)(spark, sf)
+      }
+      sc.setLocalProperty(key, drain)
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not drain")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    val offenders = jobs.toSeq.sorted.collect {
+      case (q, n) if !eagerBuild.contains(q) => s"$q($n jobs)"
+    }
+    val stale = eagerBuild.keys.filterNot(jobs.contains).toSeq.sorted
+    assert(offenders.isEmpty,
+      s"construction ran Spark jobs: ${offenders.mkString(", ")} — " +
+        "make the build lazy or list it in eagerBuild with a reason")
+    assert(stale.isEmpty,
+      s"listed in eagerBuild but built with no job (remove): " +
+        stale.mkString(", "))
+  }
+
   /** TRUE iff the subtree below a window provably bounds its row
     * count: an aggregate (output ≤ #groups), a limit, or a rank-prune
     * filter over a prior window (row_number/rank compared to a small
